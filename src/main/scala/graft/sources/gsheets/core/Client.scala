@@ -20,7 +20,7 @@ final class GoogleSheetsClient(
 
   def valuesGet(spreadsheetId: String, range: A1Range): ValueRange = {
     val url = s"$baseUrl/spreadsheets/$spreadsheetId/values/${range.range}"
-    Model.parseResponse(http.get(url, headers))(Model.valueRange)
+    Model.parseBody(http.get(url, headers))(Json.parseValueRange)
   }
 
   def valuesUpdate(spreadsheetId: String, range: A1Range,

@@ -105,6 +105,9 @@ object Model {
       sheets = j("sheets").arr.map(sheetMetadata))
   }
 
+  /** The reference decoder; `values.get` bodies go through
+    * [[Json.parseValueRange]], which returns the same value without the tree.
+    */
   def valueRange(j: JValue): ValueRange = ValueRange(
     range = j("range").str,
     majorDimension = j("majorDimension").asOpt.map(_.str).getOrElse("ROWS"),
@@ -148,10 +151,16 @@ object Model {
   /** status≠200 → [[SheetsApiException]]; decode failure →
     * [[SheetsParseException]] (`response.hpp:11-21`).
     */
-  def parseResponse[T](response: HttpResponse)(decode: JValue => T): T = {
+  def parseResponse[T](response: HttpResponse)(decode: JValue => T): T =
+    parseBody(response)(body => decode(Json.parse(body)))
+
+  /** [[parseResponse]] for a decoder that reads the body text itself
+    * ([[Json.parseValueRange]]).
+    */
+  def parseBody[T](response: HttpResponse)(decode: String => T): T = {
     if (response.statusCode != 200)
       throw new SheetsApiException(response.statusCode, response.body)
-    try decode(Json.parse(response.body))
+    try decode(response.body)
     catch {
       case e: JsonParseException =>
         throw new SheetsParseException(s"Failed to parse response: ${e.getMessage}")

@@ -36,6 +36,13 @@ object Fixtures {
     }
   }
 
+  /** `x` printed with every non-ASCII char as `\uXXXX`, for failure
+    * messages about text that may hold an unpaired surrogate: the XML
+    * test report cannot encode one, and the report writer then fails.
+    */
+  def ascii(x: Any): String =
+    String.valueOf(x).flatMap(c => if (c < 0x80) c.toString else f"\\u${c.toInt}%04x")
+
   val SpreadsheetId = "11QdEasMWbETbFVxry-SsD8jVcdYIT1zBQszcF84MdE8"
 
   /** Metadata with the sheets the reference SQL tests exercise. */

@@ -146,4 +146,105 @@ class PropertySpec extends AnyFunSuite {
       assert(Json.parse(Json.write(v)) == v)
     }
   }
+
+  // --- values.get decoding -----------------------------------------
+
+  /** A body as its token list, so whitespace can go between any two. */
+  private type Toks = List[String]
+
+  private def arrToks(items: List[Toks]): Toks =
+    "[" :: items.zipWithIndex.flatMap { case (t, i) => if (i == 0) t else "," :: t } ::: List("]")
+
+  private def objToks(fields: List[(String, Toks)]): Toks =
+    "{" :: fields.zipWithIndex.flatMap { case ((k, v), i) =>
+      (if (i == 0) Nil else List(",")) ::: k :: ":" :: v
+    } ::: List("}")
+
+  private val strLitGen: Gen[String] = Gen.choose(0, 8).flatMap(n => Gen.listOfN(n,
+    Gen.frequency(
+      6 -> Gen.alphaNumChar.map(_.toString),
+      2 -> Gen.oneOf(" ", "é", "日", "😀"),
+      3 -> Gen.oneOf("\\\"", "\\\\", "\\/", "\\n", "\\t", "\\b", "\\f", "\\r",
+        "\\u00e9", "\\u65E5", "\\uD83D\\uDE00", "\\uD800", "\\u0041"))))
+    .map(_.mkString("\"", "", "\""))
+
+  private val scalarToks: Gen[Toks] = Gen.frequency(
+    6 -> strLitGen.map(List(_)),
+    1 -> Gen.oneOf("0", "-12", "3.50", "1e5", "-0.0").map(List(_)),
+    1 -> Gen.oneOf("true", "false", "null").map(List(_)))
+
+  /** A cell: mostly strings, some numbers/booleans/nulls, and nested
+    * values, which the tree decoder renders through `Json.write`.
+    */
+  private val cellToks: Gen[Toks] = Gen.frequency(
+    8 -> scalarToks,
+    1 -> Gen.choose(0, 2).flatMap(n => Gen.listOfN(n, scalarToks)).map(arrToks),
+    1 -> scalarToks.map(v => objToks(List("\"k\"" -> v))))
+
+  private val rowToks: Gen[Toks] = Gen.frequency(
+    8 -> Gen.choose(0, 5).flatMap(n => Gen.listOfN(n, cellToks)).map(arrToks),
+    1 -> cellToks)
+
+  private val gridToks: Gen[Toks] = Gen.frequency(
+    8 -> Gen.choose(0, 5).flatMap(n => Gen.listOfN(n, rowToks)).map(arrToks),
+    1 -> scalarToks)
+
+  private val bodyToks: Gen[Toks] = {
+    val keys: Gen[List[(String, Toks)]] = for {
+      range <- Gen.option(strLitGen.map(v => "\"range\"" -> List(v)))
+      major <- Gen.option(Gen.frequency(
+        4 -> Gen.oneOf("\"ROWS\"", "\"COLUMNS\"").map(List(_)), 1 -> scalarToks)
+        .map("\"majorDimension\"" -> _))
+      values <- Gen.option(gridToks.map("\"values\"" -> _))
+      escapedKey <- Gen.option(gridToks.map("\"\\u0076alues\"" -> _))
+      unknown <- Gen.option(cellToks.map("\"nextPageToken\"" -> _))
+      dup <- Gen.option(Gen.zip(Gen.oneOf("\"range\"", "\"values\"", "\"majorDimension\""),
+        cellToks))
+    } yield List(range, major, values, escapedKey, unknown, dup).flatten
+    Gen.frequency(
+      9 -> keys.flatMap(ks => Gen.listOfN(ks.size, Gen.choose(0, 1 << 20))
+        .map(order => objToks(ks.zip(order).sortBy(_._2).map(_._1)))),
+      1 -> Gen.oneOf(rowToks, cellToks))
+  }
+
+  private val bodyGen: Gen[String] = for {
+    toks <- bodyToks
+    ws <- Gen.listOfN(toks.size + 1, Gen.frequency(
+      3 -> Gen.const(""), 1 -> Gen.oneOf(" ", "\t", "\n", "\r", " \r\n  ")))
+  } yield ws.head + toks.zip(ws.tail).map { case (t, w) => t + w }.mkString
+
+  /** What `valuesGet` returns for `body`, or the message it throws. */
+  private def viaClient(body: String): Either[String, ValueRange] = {
+    val mock = new MockHttp
+    mock.addJson(body)
+    val client = new GoogleSheetsClient(mock, new BearerTokenAuth("t"), "http://sheets.test")
+    try Right(client.valuesGet("s", A1Range("Sheet1")))
+    catch { case e: SheetsParseException => Left(e.getMessage) }
+  }
+
+  private def viaTree(body: String): Either[String, ValueRange] =
+    try Right(Model.parseResponse(HttpResponse(200, body = body))(Model.valueRange))
+    catch { case e: SheetsParseException => Left(e.getMessage) }
+
+  test("property: valuesGet decodes like Model.valueRange(Json.parse(body))") {
+    forAll(bodyGen) { body =>
+      val (got, ref) = (viaClient(body), viaTree(body))
+      val same = got.isRight && got == ref
+      assert(same, Fixtures.ascii(s"$body\n$got\n$ref"))
+    }
+  }
+
+  test("property: truncated or corrupted bodies fail like the tree decoder") {
+    val cut = for { b <- bodyGen; k <- Gen.choose(0, b.length - 1) } yield b.take(k)
+    val corrupt = for {
+      b <- bodyGen
+      k <- Gen.choose(0, b.length - 1)
+      c <- Gen.oneOf("{", "}", "[", "]", ",", ":", "\"", "\\", "x", "-", "nul", "\\u12")
+    } yield b.take(k) + c + b.drop(k + 1)
+    forAll(Gen.oneOf(cut, corrupt)) { body =>
+      val (got, ref) = (viaClient(body), viaTree(body))
+      val same = got == ref && got.left.forall(_.startsWith("Failed to parse response: "))
+      assert(same, Fixtures.ascii(s"$body\n$got\n$ref"))
+    }
+  }
 }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
-import graft.sources.gsheets.GSheetsBind
+import graft.sources.gsheets.{GSheetsBind, GSheetsInputPartition}
 import graft.sources.gsheets.core.{MockHttp, TransportRegistry}
 
 /** End-to-end read scenarios replaying `test/sql/read_gsheet.test`
@@ -719,5 +719,61 @@ class ReadEndToEndSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
     assert(exec.queryExecution.executedPlan.toString.contains("HashAggregate"))
     assert(exec.collect().head.getLong(0) == 6L)
+  }
+
+  /** `p` after the trip a task takes: through Spark's closure serializer. */
+  private def shipped(p: GSheetsInputPartition): GSheetsInputPartition = {
+    val env = org.apache.spark.SparkEnv.get
+    assert(env.closureSerializer.isInstanceOf[org.apache.spark.serializer.JavaSerializer])
+    val ser = env.closureSerializer.newInstance()
+    val back = ser.deserialize[GSheetsInputPartition](ser.serialize(p))
+    assert(back ne p)
+    back
+  }
+
+  private def cells(p: GSheetsInputPartition): Seq[Seq[String]] =
+    p.rows.toSeq.map(_.toSeq)
+
+  test("bind-snapshot partitions survive task serialization cell for cell") {
+    spark // starts the SparkEnv whose closure serializer tasks use
+    val types = Array[DataType](StringType, DoubleType, StringType)
+    val rows: Array[Array[String]] = Array(
+      Array("plain", "", null),
+      Array(null, null, ""),
+      Array("naïve café", "日本語", "😀 and 𝄞"),
+      // Unpaired surrogates are no UTF-8 text, but a Java string may hold one.
+      Array("\uD800 lone high", "lone low \uDC00", "\uDC00\uD800"),
+      Array("\u0000 nul \u007f \u0080 \u07ff \u0800 \uffff"),
+      Array(),
+      Array("ragged"),
+      // Long mixed-width text, and ASCII after wider text.
+      Array("é" * 40 + "x" * 40, "日", "ab"))
+    Seq(rows, Array.empty[Array[String]], Array(Array.empty[String]),
+        Array(Array("日"), Array("ab")), rows.reverse).foreach { rs =>
+      val p = GSheetsInputPartition(rs, types)
+      val back = shipped(p)
+      val same = cells(back) == cells(p)
+      assert(same, ascii(s"${cells(back)} != ${cells(p)}"))
+      assert(back.types.toSeq == types.toSeq)
+    }
+  }
+
+  test("planned partitions with _sheet_row round-trip and read back unchanged") {
+    val mock = new MockHttp
+    mock.addJson(metadataJson)
+    mock.addJson(valueRangeJson("Sheet1!A1:Z1000", Seq(
+      Seq("name", "note"), Seq("Zoë", "😀"), Seq("", "x"), Seq("日本"))))
+    val (r, _) = reader(mock)
+    val df = r.option("numPartitions", "2").load(SpreadsheetId)
+      .select("name", "note", "_sheet_row")
+    val parts = df.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.get.inputPartitions.collect { case p: GSheetsInputPartition => p }
+    assert(parts.map(_.rows.length).sum == 3)
+    parts.foreach(p => assert(cells(shipped(p)) == cells(p)))
+    assert(parts.flatMap(cells) == Seq(
+      Seq("Zoë", "😀", "2"), Seq("", "x", "3"), Seq("日本", null, "4")))
+    assert(rows(df) == Seq(
+      Seq("Zoë", "😀", 2L), Seq(null, "x", 3L), Seq("日本", null, 4L)))
   }
 }
